@@ -10,7 +10,7 @@ The pipeline stage (synthetic corpus scaled to the sf, full
 segment→detect→assemble→classify→link→triples run with committed stage
 tables) is the BASELINE.json headline — its triples/sec is reported
 alongside per-query latencies. Scaling-efficiency evidence (same job at
-local[8] vs local[32]) lives in scripts/scaling_bench.py / BASELINE.md.
+N vs 4N cores) lives in the BENCH_SCALING*.json artifacts / BASELINE.md.
 """
 
 from __future__ import annotations
@@ -147,7 +147,7 @@ _CAL_COMPONENTS = ("jvm_shuffle_s", "numpy_st_s", "py_udf_s")
 def load_cal_ref(cpus: int) -> dict | None:
     """Cross-session clean-machine estimate for the fixed-work probe,
     keyed by cpu count. Min-ever merging is correct HERE (unlike for
-    measured walls, scripts/scaling_bench.py --merge-prior): the probe is
+    measured walls, BENCH_SCALING.json's best-per-metric merge): the probe is
     constant work, so its minimum over all sessions converges to the
     quiet-machine constant, and a session whose EVERY probe is slow —
     which session-relative factors would self-normalize to 1.0 — still
@@ -255,8 +255,8 @@ def main() -> None:
                      triple_partitions=max(cpus * 2, 32), granularity="fast")
     finally:
         shutil.rmtree(warm, ignore_errors=True)
-    # three measured runs, SAME steady-state protocol as
-    # scripts/scaling_bench.py (warmup first, so JIT has settled).
+    # three measured runs, SAME steady-state protocol as the
+    # BENCH_SCALING*.json artifacts (warmup first, so JIT has settled).
     # Hypervisor noise on this VM arrives in minutes-long windows
     # (measured swings: the same 2M-page run 56s vs 102s an hour apart);
     # the MEDIAN wall is the headline, the min is "best observed", and
@@ -327,7 +327,7 @@ def main() -> None:
         "triples_per_sec_best_observed": round(summary["triples"] / min(walls), 2),
         "pages_per_sec_best_observed": round(n_pages / min(walls), 2),
     }
-    # attach the latest two-cluster-size evidence (scripts/scaling_bench.py)
+    # attach the latest two-cluster-size evidence (BENCH_SCALING.json)
     scaling_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                 "BENCH_SCALING.json")
     if os.path.exists(scaling_path):
@@ -345,7 +345,7 @@ def main() -> None:
             "triples_per_sec_4N": s.get("runs", {}).get("16", {}).get("triples_per_sec"),
         }
     # amortization evidence: the same protocol at 4x the input
-    # (scripts/scaling_bench.py 8000000 --out BENCH_SCALING_8M.json)
+    # (the BENCH_SCALING_8M.json artifact)
     big_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                             "BENCH_SCALING_8M.json")
     if os.path.exists(big_path):

@@ -22,27 +22,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import HEADLINE as DEFAULT_QUERIES  # noqa: E402
 from split_ner_spark.queries import QUERIES, drain_cache  # noqa: E402
 from split_ner_spark.session import get_spark  # noqa: E402
 
-DEFAULT_QUERIES = [
-    "kg_span_assembly",
-    "kg_eval_f1",
-    "kg_cooccurrence",
-    "pricing_summary",
-    "top_suppliers_per_nation",
-    "events_sessionize",
-    "text_quality",
-    "text_lang_id",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash_pairs",
-    "dedup_lsh_jaccard",
-    "ann_cosine_topk",
-    "ann_lsh_topk",
-    "emb_near_dup",
-    "kg_linked_triples",
-]
 # queries that only need documents/embeddings (runnable on the big replica)
 DOC_EMB_QUERIES = [
     "kg_span_assembly",

@@ -61,6 +61,11 @@ def main() -> None:
                 [sys.executable, script, root, str(n_pages)],
                 capture_output=True, text=True,
             )
+            if out.returncode != 0:
+                tail = "\n    ".join(out.stderr.strip().splitlines()[-20:])
+                print(f"FAILED {root} returncode={out.returncode}\n    {tail}",
+                      flush=True)
+                continue
             for line in out.stdout.splitlines():
                 if line.startswith("RESULT"):
                     print(line, flush=True)

@@ -151,14 +151,17 @@ def run_pipeline(
 ) -> dict:
     """Full pipeline over the deterministic synthetic corpus.
 
-    ``granularity``:
+    ``granularity`` picks the front end (how ``mentions`` is produced) and
+    whether ``linked`` is a committed stage; the back half (link →
+    triples → salted write) is shared:
     - ``"full"`` — commit every stage (fine-grained resume; default).
     - ``"fast"`` — one fused lazy DAG with two commit points (mentions,
-      triples). The chain gen→segment→detect→assemble→classify is narrow
-      (no shuffle), so fusing removes four materialization barriers — the
-      Spark-first shape (single DAG) that the reference's file-glued
-      pipeline lacks (/root/reference/README.md:130-148); resume still
-      works at the two commits.
+      triples); ``linked`` is cached, not committed. The chain
+      gen→segment→detect→assemble→classify is narrow (no shuffle), so
+      fusing removes four materialization barriers — the Spark-first
+      shape (single DAG) that the reference's file-glued pipeline lacks
+      (its README.md:130-148); resume still works at the two
+      commits.
 
     Returns a summary dict (rows per stage, triple P/R when evaluate=True,
     wall seconds, triples/sec)."""
@@ -168,6 +171,7 @@ def run_pipeline(
     def build_pages_gold():
         return corpus.gen_pages_with_gold(spark, n_pages, seed)
 
+    # front end: how ``mentions`` is produced
     pg = None
     if granularity == "fast":
         from .ops.fused import fused_mentions
@@ -177,44 +181,6 @@ def run_pipeline(
             lambda: fused_mentions(spark, n_pages, seed),
             resume,
         )
-        # cache the linked mentions: make_triples reads them four times
-        # (typed/mentioned/co-mention a+b) and the salting pass twice more —
-        # without a materialization point each pass re-executes the link
-        # join. In full mode the committed "linked" table plays this role.
-        _link_cleanup: list = []
-        # canonicalize_self=True == canonicalize_self_linked(link_mentions)
-        # (pinned by tests/test_link_canon_fold.py) with the LSH/CC work on
-        # the surface dimension instead of two extra fact-table scans
-        linked = (
-            link_mentions(
-                mentions, alias_dim(spark, seed), cleanup=_link_cleanup,
-                canonicalize_self=True,
-            )
-            # make_triples only needs these four columns — a slim cache is
-            # ~4x smaller than the full mention rows
-            .select("url", "sent_id", "canonical_id", "entity_type")
-            .cache()
-        )
-        # round 6: hot-subject detection samples the already-cached
-        # ``linked`` frame (canonical_id counts ≈ per-subject triple
-        # counts — a partitioning heuristic, so output values are
-        # unchanged) instead of a cached triple set; make_triples then
-        # executes exactly ONCE, inside the write job, and the 7.5M-row
-        # triple cache materialization disappears from the wall.
-        tri_built = not (resume and sc.is_committed("triples"))
-        cooccur_obs = Observation("cooccur_cap") if tri_built else None
-        tri = make_triples(linked, observation=cooccur_obs)
-        triples = sc.stage(
-            "triples",
-            lambda: salted_by_subject(
-                tri, triple_partitions,
-                detect_on=linked, detect_col="canonical_id",
-            ),
-            resume,
-        )
-        linked.unpersist()
-        for _df in _link_cleanup:
-            _df.unpersist()
         stage_names = ["mentions", "triples"]
     else:
         pg = sc.stage("pages_gold", build_pages_gold, resume)
@@ -227,36 +193,55 @@ def run_pipeline(
             lambda: classify_mentions(assemble_untyped(detected)).drop("tokens"),
             resume,
         )
-        _link_cleanup: list = []
-        linked = sc.stage(
-            "linked",
-            lambda: link_mentions(
-                mentions, alias_dim(spark, seed), cleanup=_link_cleanup,
-                canonicalize_self=True,
-            ),
-            resume,
-        )
-        # the "linked" stage is committed to parquet at this point, so the
-        # link dim cache is no longer needed by anything downstream
-        for _df in _link_cleanup:
-            _df.unpersist()
-        tri_built = not (resume and sc.is_committed("triples"))
-        cooccur_obs = Observation("cooccur_cap") if tri_built else None
-        triples = sc.stage(
-            "triples",
-            # detection on the committed linked table (round 6): sampling
-            # the triples frame itself would re-run make_triples for the
-            # sample pass
-            lambda: salted_by_subject(
-                make_triples(linked, observation=cooccur_obs),
-                triple_partitions,
-                detect_on=linked, detect_col="canonical_id",
-            ),
-            resume,
-        )
         stage_names = [
             "pages_gold", "sentences", "detected", "mentions", "linked", "triples"
         ]
+
+    # back half: link → triples (+ co-occurrence cap Observation) → salted
+    # write → release the link caches
+    link_cleanup: list = []
+
+    def build_linked() -> DataFrame:
+        # canonicalize_self=True == canonicalize_self_linked(link_mentions)
+        # (pinned by tests/test_link_canon_fold.py) with the LSH/CC work on
+        # the surface dimension instead of two extra fact-table scans
+        return link_mentions(
+            mentions, alias_dim(spark, seed), cleanup=link_cleanup,
+            canonicalize_self=True,
+        )
+
+    tri_built = not (resume and sc.is_committed("triples"))
+    linked = None
+    if granularity == "full":
+        linked = sc.stage("linked", build_linked, resume)
+    elif tri_built:
+        # make_triples reads linked four times (typed/mentioned/co-mention
+        # a+b) and the salting pass twice more; without a materialization
+        # point each pass re-executes the link join. Only the four columns
+        # make_triples needs are cached — ~4x smaller than the mention rows.
+        # Skipped when triples is committed: nothing downstream reads it.
+        linked = (
+            build_linked()
+            .select("url", "sent_id", "canonical_id", "entity_type")
+            .cache()
+        )
+        link_cleanup.append(linked)
+    cooccur_obs = Observation("cooccur_cap") if tri_built else None
+    triples = sc.stage(
+        "triples",
+        # hot-subject detection samples linked (canonical_id counts ≈
+        # per-subject triple counts — a partitioning heuristic, so output
+        # values are unchanged) instead of a cached triple set, so
+        # make_triples executes exactly once, inside the write job
+        lambda: salted_by_subject(
+            make_triples(linked, observation=cooccur_obs),
+            triple_partitions,
+            detect_on=linked, detect_col="canonical_id",
+        ),
+        resume,
+    )
+    for _df in reversed(link_cleanup):  # dependents before their inputs
+        _df.unpersist()
 
     wall_s = time.time() - t_start
     # Co-occurrence cap observability (VERDICT r4 #3): how many sentences

@@ -73,22 +73,26 @@ _FAN_OUT_TABLES = {"documents", "embeddings"}
 
 def _scan_layout(path: str) -> tuple[int, int]:
     """(total_bytes, total_row_groups) of a parquet file/directory,
-    driver-side footer metadata only (no Spark job)."""
+    driver-side footer metadata only (no Spark job). Past
+    ``_FAN_OUT_MAX_BYTES`` the walk stops: total_bytes is then only the
+    size seen so far, and the row-group count a large sentinel."""
     import os
 
     import pyarrow.parquet as pq
 
-    files: list[str] = []
     if os.path.isdir(path):
-        for root, _d, fs in os.walk(path):
-            files.extend(os.path.join(root, f) for f in fs
-                         if f.endswith(".parquet"))
+        walk = (os.path.join(root, f) for root, _d, fs in os.walk(path)
+                for f in fs if f.endswith(".parquet"))
     else:
-        files = [path]
-    total = sum(os.path.getsize(f) for f in files)
-    if total >= _FAN_OUT_MAX_BYTES:
-        # big input: scan splits provide parallelism; do not touch footers
-        return total, 1 << 30
+        walk = [path]
+    files: list[str] = []
+    total = 0
+    for f in walk:
+        total += os.path.getsize(f)
+        if total >= _FAN_OUT_MAX_BYTES:
+            # big input: scan splits provide parallelism; do not touch footers
+            return total, 1 << 30
+        files.append(f)
     rgs = 0
     for f in files:
         try:
@@ -195,20 +199,15 @@ def _typ_col(tok: Column, gaz: dict[str, str]) -> Column:
     return expr.otherwise(F.lit(None).cast("string"))
 
 
-def gaz_spans(documents: DataFrame, gaz: dict[str, str]) -> DataFrame:
-    """Typed spans = maximal same-type runs of gazetteer tokens, via the
-    pipeline's BIO assembler (W3, with the reference can_continue guard).
+def gaz_tags(df: DataFrame, gaz: dict[str, str]) -> DataFrame:
+    """The gazetteer BIO tagger: add ``typs`` (each token's gazetteer
+    type, NULL off-gazetteer) and ``tags`` (B-<type> at a run start,
+    I-<own type> inside a run, O outside) to a frame with ``tokens``.
 
-    BIO tags: B-<type> at a gazetteer run start, I-<own type> inside a run
-    — a type change inside a run therefore truncates the span exactly as
-    /root/reference/splitner/analysis.py:77-91 does."""
-    df = documents.select("doc_id", "lang", ws_tokens().alias("tokens"))
-    # One gazetteer-case-chain evaluation per token (round 6, second
-    # session): typs[i] = type of token i, materialized once; the old
-    # form re-ran the chain a second time per token to type the PREVIOUS
-    # token. tags[i] is unchanged: prev type == element_at(typs,
-    # greatest(i, 1)) by construction (transform's i is 0-based,
-    # element_at is 1-based — same indexing the old form used on tokens).
+    The case chain runs once per token: ``tags[i]`` reads the previous
+    token's type back from ``typs`` (``element_at(typs, greatest(i, 1))``
+    — transform's i is 0-based, element_at 1-based) instead of typing
+    that token a second time."""
     typed = df.withColumn(
         "typs", F.transform("tokens", lambda t: _typ_col(t, gaz))
     )
@@ -221,7 +220,19 @@ def gaz_spans(documents: DataFrame, gaz: dict[str, str]) -> DataFrame:
             .otherwise(F.concat(F.lit("I-"), typ))
         )
 
-    tagged = typed.withColumn("tags", F.transform("typs", tag))
+    return typed.withColumn("tags", F.transform("typs", tag))
+
+
+def gaz_spans(documents: DataFrame, gaz: dict[str, str]) -> DataFrame:
+    """Typed spans = maximal same-type runs of gazetteer tokens, via the
+    pipeline's BIO assembler (W3, with the reference can_continue guard).
+
+    A type change inside a run truncates the span (:func:`gaz_tags` tags
+    I-<own type>) exactly as the reference's splitner/analysis.py:77-91
+    does."""
+    tagged = gaz_tags(
+        documents.select("doc_id", "lang", ws_tokens().alias("tokens")), gaz
+    )
     return (
         tagged.withColumn("span", F.explode(spans_bio_col("tags")))
         .select(
@@ -971,20 +982,7 @@ def q_kg_mention_contexts(
     no shuffle before the final groupBy, so the plan holds at corpus scale.
     """
     docs = load(spark, sf_dir, "documents")
-    df = docs.select("doc_id", ws_tokens().alias("tokens"))
-
-    def tag(t: Column, i: Column) -> Column:
-        typ = _typ_col(t, GAZ_PRED)
-        prev_typ = _typ_col(
-            F.element_at(F.col("tokens"), F.greatest(i, F.lit(1))), GAZ_PRED
-        )
-        return (
-            F.when(typ.isNull(), F.lit("O"))
-            .when((i == 0) | prev_typ.isNull(), F.concat(F.lit("B-"), typ))
-            .otherwise(F.concat(F.lit("I-"), typ))
-        )
-
-    tagged = df.withColumn("tags", F.transform("tokens", tag))
+    tagged = gaz_tags(docs.select("doc_id", ws_tokens().alias("tokens")), GAZ_PRED)
     # rewritten token stream: keep O (text) and B- (type name), drop I-
     kept = F.filter(
         F.arrays_zip(F.col("tokens"), F.col("tags")),
@@ -1203,20 +1201,7 @@ def q_kg_scheme_rewrite(
     from .ops.schemes import to_scheme_col
 
     docs = load(spark, sf_dir, "documents")
-    df = docs.select("doc_id", ws_tokens().alias("tokens"))
-
-    def tag(t: Column, i: Column) -> Column:
-        typ = _typ_col(t, GAZ_PRED)
-        prev_typ = _typ_col(
-            F.element_at(F.col("tokens"), F.greatest(i, F.lit(1))), GAZ_PRED
-        )
-        return (
-            F.when(typ.isNull(), F.lit("O"))
-            .when((i == 0) | prev_typ.isNull(), F.concat(F.lit("B-"), typ))
-            .otherwise(F.concat(F.lit("I-"), typ))
-        )
-
-    tagged = df.withColumn("tags", F.transform("tokens", tag))
+    tagged = gaz_tags(docs.select("doc_id", ws_tokens().alias("tokens")), GAZ_PRED)
     return tagged.select(
         "doc_id",
         F.concat_ws(" ", to_scheme_col("tags", scheme)).alias(f"{scheme}_tags"),

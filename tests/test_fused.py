@@ -44,3 +44,24 @@ def test_fast_pipeline_matches_full(spark, tmp_path):
     assert fast["triple_match"]["precision"] == full["triple_match"]["precision"]
     assert fast["triple_match"]["recall"] == full["triple_match"]["recall"]
     assert fast["triple_match"]["recall"] >= 0.95
+
+
+def test_fast_rerun_of_committed_triples_skips_linking(spark, tmp_path, monkeypatch):
+    """A fast rerun over a workdir whose triples are committed builds no
+    linked frame: nothing downstream of the triples commit reads it."""
+    from split_ner_spark import pipeline
+
+    wd = str(tmp_path / "fast")
+    first = pipeline.run_pipeline(
+        spark, wd, n_pages=200, evaluate=False, granularity="fast"
+    )
+
+    def no_link(*args, **kwargs):
+        raise AssertionError("link_mentions ran although triples is committed")
+
+    monkeypatch.setattr(pipeline, "link_mentions", no_link)
+    again = pipeline.run_pipeline(
+        spark, wd, n_pages=200, evaluate=False, granularity="fast"
+    )
+    assert again["rows"] == first["rows"]
+    assert again["cooccur_cap"] is None

@@ -4,10 +4,14 @@ round-5 composition canonicalize_self_linked(link_mentions(...)).
 The corpus slice is sized so the fuzzy/self paths are exercised: fuzzy
 surfaces (concatenated corp variants) miss the dictionary, and FN-noise
 lowercased mentions plus fake capitalized bigrams produce self-linked
-surfaces, several of which are near-duplicates of each other.
+surfaces. No two of the corpus's self-linked surfaces are near-duplicates
+of each other, so the test plants a one-letter variant of one of them;
+the merge then has a pair to collapse.
 """
 
 from __future__ import annotations
+
+from pyspark.sql import functions as F
 
 from split_ner_spark import corpus
 from split_ner_spark.ops.canon import canonicalize_self_linked
@@ -24,6 +28,10 @@ def test_canonicalize_fold_matches_composition(spark):
     mentions = classify_mentions(
         assemble_untyped(detect_spans(segment_pages(pages)))
     ).drop("tokens")
+    variant = mentions.filter(F.lower("surface") == "quuxton grumbly").withColumn(
+        "surface", F.lit("Quuxton Grumblys")
+    )
+    mentions = mentions.unionByName(variant)
     alias = alias_dim(spark)
 
     old = canonicalize_self_linked(link_mentions(mentions, alias))
@@ -38,3 +46,10 @@ def test_canonicalize_fold_matches_composition(spark):
     via_idx = old.columns.index("linked_via")
     vias = {row[via_idx] for row in a}
     assert "self" in vias and "exact" in vias
+    cid_idx = old.columns.index("canonical_id")
+    norm_idx = old.columns.index("surface_norm")
+    remapped = [
+        row for row in a
+        if row[via_idx] == "self" and row[cid_idx] != "surface:" + row[norm_idx]
+    ]
+    assert remapped

@@ -85,6 +85,23 @@ def test_x6_single_shuffle(spark):
     assert p.count("Exchange") <= 2, p[:2000]
 
 
+def test_gazetteer_chain_evaluated_once(spark):
+    """One gazetteer tagger (queries.gaz_tags): each token's type comes
+    from ONE evaluation of the gazetteer CASE chain, and the BIO tags
+    read the previous token's type back from it. Counted on the
+    optimized plan by the arms comparing against the first gazetteer
+    word. kg_mention_contexts keeps extra copies: Spark infers a size
+    filter from explode(ent_idx) and pushes it below the tagging Project,
+    inlining the chain into the filter."""
+    def arms(name: str) -> int:
+        df = Q.QUERIES[name](spark, SF_DIR)
+        return df._jdf.queryExecution().optimizedPlan().toString().count("= spark)")
+
+    assert arms("kg_span_assembly") == 1
+    assert arms("kg_scheme_rewrite") == 1
+    assert arms("kg_mention_contexts") <= 5
+
+
 def test_salted_write_no_join(spark):
     """Round 4: hot-subject salting is an isin literal — no broadcast
     join, exactly the one repartition Exchange."""
